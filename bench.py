@@ -5,6 +5,9 @@ Output contract (round 3 — driver-parseable):
   * The full per-query timing map is written to ``BENCH_DETAIL.json``
     (and printed on its own stdout line, before the final line, so the
     data survives even if the file is not collected).
+  * The second-to-last stdout line is a compact ``{name: seconds}`` map
+    (2 dp), so per-query numbers survive a tail capture that drops the
+    long detail line.
   * The LAST stdout line is a compact JSON object small enough to always
     survive the driver's bounded tail capture:
         {"metric": ..., "value": <total_sec>, "unit": "sec",
@@ -73,6 +76,21 @@ def _host_signature(start: dict | None) -> dict:
         sig["steal_pct"] = round(100.0 * (end["steal"] - start["steal"]) / dt, 2)
         sig["iowait_pct"] = round(100.0 * (end["iowait"] - start["iowait"]) / dt, 2)
     return sig
+
+
+def _bench_host(spark, start: dict | None) -> dict:
+    """``_host_signature`` plus the core count, master and Spark version
+    the timings were taken at."""
+    return {
+        "nproc": len(os.sched_getaffinity(0)),
+        "master": spark.sparkContext.master,
+        "spark": spark.version,
+        **_host_signature(start),
+    }
+
+
+def _print_per_query(timings: dict[str, float]) -> None:
+    print(json.dumps({n: round(t, 2) for n, t in timings.items()}, separators=(",", ":")))
 
 
 COMPARE_BAND = 1.35  # ±35 % session band (PERFORMANCE.md round-8, measured)
@@ -369,11 +387,12 @@ def full_sweep() -> None:
         "queries": timings,
         "errors": errors,
         "sf": float(sf),
-        "host": _host_signature(cpu0),
+        "host": _bench_host(spark, cpu0),
     }
     path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_FULL.json")
     with open(path, "w") as f:
         json.dump(detail, f, indent=1, sort_keys=True)
+    _print_per_query(timings)
     print(
         json.dumps(
             {
@@ -470,7 +489,7 @@ def main() -> None:
         "n_queries": len(timings),
         "queries": timings,
         "sf": float(sf),
-        "host": _host_signature(cpu0),
+        "host": _bench_host(spark, cpu0),
     }
     detail_path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json")
     with open(detail_path, "w") as f:
@@ -479,6 +498,7 @@ def main() -> None:
     # the file is lost); the FINAL line is compact so the driver's
     # bounded tail capture always parses it.
     print(json.dumps(detail))
+    _print_per_query(timings)
     print(
         json.dumps(
             {

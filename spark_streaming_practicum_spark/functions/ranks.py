@@ -26,16 +26,22 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-# Persisted intermediates must outlive the helper call (the returned
+# Frames pinned for a caller must outlive the helper call (the returned
 # plan reads them when the CALLER materializes it), so they cannot be
-# unpersisted before returning. Instead cleanup is centralized here: a
-# bounded FIFO of live persisted frames. Each new helper invocation
-# evicts the oldest entries beyond the cap, so a 350+-query sweep
-# accumulates at most _MAX_LIVE cached frames instead of hundreds.
-# The cap is generous vs. the heaviest composite caller
-# (rfm_customer_segments persists four frames per invocation), so a
-# query's own frames are never evicted before its output materializes —
-# and even if they were, the plan recomputes, losing only speed.
+# released before returning. This bounded FIFO covers only frames
+# pinned through ``persisted()``: each new entry evicts the oldest
+# beyond _MAX_LIVE, so a 350+-query sweep holds at most _MAX_LIVE
+# cached frames. The cap is generous against the heaviest caller, so a
+# query's own frames are not evicted before its output materializes,
+# and even then a pending plan merely recomputes them.
+#
+# The rank and cumulative-sum helpers below pin with an untracked lazy
+# ``localCheckpoint`` instead; the ContextCleaner reclaims those blocks
+# once nothing references the checkpointed frame. A count-capped
+# release cannot cover checkpoints: a checkpoint has no lineage to
+# recompute from, so unpersisting one that a pending plan still reads
+# fails that job with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND (verified on
+# Spark 4.1.2).
 _live_persisted: list[DataFrame] = []
 _MAX_LIVE = 8
 

@@ -260,9 +260,11 @@ def rfm_customer_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Round 13: the three quartiles share ONE ranking pass instead of
     three. The rollup is melted to (c_custkey, mid, val) — 3N rows,
-    with each metric mapped order-exactly to DOUBLE (timestamps via
-    unix_micros; counts and epoch-microsecond values are integers
-    < 2^53, so the cast is injective) — and ranked once by
+    with each metric mapped to DOUBLE (timestamps via unix_micros;
+    counts and epoch-microsecond values are integers < 2^53, so their
+    cast is injective; ``monetary`` is order-consistent with the oracle
+    only because Spark and DuckDB rank the identical
+    ``CAST(... AS DOUBLE)`` value) — and ranked once by
     (mid, val DESC, c_custkey). Every
     metric contributes exactly N rows (the rollup has no NULLs by
     construction: inner join, then MAX/COUNT/SUM over >=1 order), so

@@ -26,7 +26,7 @@ def build_session(
     ``spark.sql.shuffle.partitions`` change (there: ~2-3x total cores,
     sized so shuffle partitions stay in the 100-200 MB range).
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or int(cpus)
 

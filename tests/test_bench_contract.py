@@ -17,6 +17,8 @@ import pytest
 import bench
 from spark_streaming_practicum_spark.registry import QueryDef, all_queries
 
+from .conftest import SF_DIR
+
 
 def test_headline_queries_all_registered():
     """A headline name missing from the registry must be caught here,
@@ -91,3 +93,33 @@ def test_warmup_failure_exits_nonzero_and_names_query(spark, monkeypatch, capsys
     err = capsys.readouterr().err
     assert "WARMUP FAILED broken_contract_q" in err
     assert "deliberately broken" in err
+
+
+@pytest.mark.parametrize(
+    "entry, detail_file", [("main", "BENCH_DETAIL.json"), ("full_sweep", "BENCH_FULL.json")]
+)
+def test_per_query_line_precedes_final_line(
+    entry, detail_file, spark, monkeypatch, capsys, tmp_path
+):
+    """The second-to-last stdout line is the compact per-query map, the
+    last line keeps its shape, and the detail file's host block names
+    the core count, master and Spark version."""
+    name = "agg_pricing_summary"
+    monkeypatch.setattr(bench, "all_queries", lambda: {name: all_queries()[name]})
+    monkeypatch.setattr(bench, "HEADLINE", [name])
+    monkeypatch.setattr(bench, "build_session", lambda app_name: spark)
+    monkeypatch.setattr(spark, "stop", lambda: None)
+    monkeypatch.setattr(bench, "__file__", str(tmp_path / "bench.py"))
+    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", SF_DIR)
+    try:
+        getattr(bench, entry)()
+    except SystemExit as exc:  # full_sweep exits with its error status
+        assert exc.code == 0
+    lines = capsys.readouterr().out.strip().splitlines()
+    per_query, final = json.loads(lines[-2]), json.loads(lines[-1])
+    assert list(per_query) == [name]
+    assert per_query[name] == round(per_query[name], 2)
+    assert {"metric", "value", "unit", "n_queries", "sf"} <= set(final)
+    assert final["n_queries"] == 1
+    host = json.loads((tmp_path / detail_file).read_text())["host"]
+    assert {"nproc", "master", "spark"} <= set(host)

@@ -60,6 +60,28 @@ def test_cc_dedup_plans_stay_truncated(spark):
         assert n_lines < 1500, f"{name}: plan re-inflated to {n_lines} lines"
 
 
+def test_gbdt_stump_frames_stay_checkpointed(spark):
+    """gbdt's five lazy checkpoints are first materialized by broadcast
+    collects, an undocumented coupling. Measured at sf0.001 on Spark
+    4.1.2: 18 jobs and a 107-line plan today; 119 jobs with the
+    pre-checkpoint persisted ``cells``; 15 jobs but a 3,213-line plan
+    with the checkpoints simply removed. So pin both the job count from
+    build through ``collect()`` and the plan size."""
+    sc = spark.sparkContext
+    group = "gbdt-job-budget"
+    sc.setJobGroup(group, "gbdt_stump_boosting job budget")
+    try:
+        df = DEFS["gbdt_stump_boosting"].fn(spark, SF_DIR)
+        n_lines = formatted_plan(df).count("\n")
+        df.collect()
+        n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert n_jobs <= 22, f"gbdt ran {n_jobs} jobs"
+    assert n_lines < 500, f"gbdt plan re-inflated to {n_lines} lines"
+
+
 def test_topo_layers_bellman_optimality(spark):
     """Certificate for the round-13 path-doubling rewrite: the layer
     assignment must satisfy the longest-path Bellman conditions on the
