@@ -42,6 +42,7 @@ import os
 import sys
 import time
 
+from spark_streaming_practicum_spark.functions.pins import release_pins
 from spark_streaming_practicum_spark.registry import all_queries
 from spark_streaming_practicum_spark.session import build_session
 
@@ -359,9 +360,6 @@ def full_sweep() -> None:
     cpu0 = _cpu_sample()
     spark = build_session(app_name="ssp-bench-full")
     defs = all_queries()
-    from spark_streaming_practicum_spark.functions.ranks import (
-        release_persisted_frames,
-    )
 
     timings: dict[str, float] = {}
     errors: dict[str, str] = {}
@@ -376,8 +374,7 @@ def full_sweep() -> None:
             timings[name] = round(time.perf_counter() - start, 3)
         except Exception as exc:  # noqa: BLE001 — recorded, sweep continues
             errors[name] = f"{type(exc).__name__}: {exc}"[:300]
-        spark.catalog.clearCache()
-        release_persisted_frames()
+        release_pins()
     total = round(sum(timings.values()), 3)
     detail = {
         "metric": "full-registry query wall time (noop-materialized, 1 run)",
@@ -443,9 +440,9 @@ def main() -> None:
             print(f"WARMUP FAILED {name}: {err[:300]}", file=sys.stderr)
         spark.stop()
         sys.exit(2)
-    # Warmup caches must not occupy (and thrash) storage memory during
-    # the measured runs.
-    spark.catalog.clearCache()
+    # Warmup pins must not occupy (and thrash) storage memory during the
+    # measured runs.
+    release_pins()
     # Host signature covers the MEASURED window only (warmup excluded).
     cpu0 = _cpu_sample()
 
@@ -461,21 +458,12 @@ def main() -> None:
 
     # min of 2 runs per query: the host is shared, and the minimum is the
     # stable estimator of actual plan cost under background load.
-    from spark_streaming_practicum_spark.functions.ranks import (
-        release_persisted_frames,
-    )
-
     timings: dict[str, float] = {}
     for name in HEADLINE:
         timings[name] = round(min(run_once(name), run_once(name)), 3)
-        # Isolate queries: run 2 of a query may reuse run 1's persisted
-        # subtrees (that reuse is part of the operator's own design), but
-        # caches must never leak across queries and pile up into
-        # storage-memory eviction thrash. Operator persists route
-        # through the bounded FIFO since round 4 — drain it too so its
-        # references don't pin the frames clearCache just dropped.
-        spark.catalog.clearCache()
-        release_persisted_frames()
+        # Isolate queries: pins must never leak across queries and pile up
+        # into storage-memory eviction thrash.
+        release_pins()
 
     total = round(sum(timings.values()), 3)
     # ONE metric string everywhere (round-3 verdict: the detail file and

@@ -23,7 +23,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from spark_streaming_practicum_spark.registry import all_queries
 from spark_streaming_practicum_spark.session import build_session
-from spark_streaming_practicum_spark.functions.ranks import release_persisted_frames
+from spark_streaming_practicum_spark.functions.pins import release_pins
 
 PLANS_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r13")
 
@@ -41,6 +41,7 @@ def census(plan: str) -> dict:
         "MapInArrow/Pandas": len(re.findall(r"\bMapIn(Arrow|Pandas)\b", plan)),
         "Window": len(re.findall(r"\bWindow\b", plan)),
         "InMemoryTableScan": len(re.findall(r"\bInMemoryTableScan\b", plan)),
+        "ExistingRDD": len(re.findall(r"\bExistingRDD\b", plan)),
         # round-13 mega-plan audit (r12 verdict item 5): plan size proxies
         # Catalyst re-optimization cost, which grows with lineage depth.
         "plan_lines": plan.count("\n"),
@@ -80,7 +81,7 @@ def main() -> None:
         df = fn(spark, "/root/testdata/sf0.001")
         if not df.isStreaming:
             df.write.mode("overwrite").format("noop").save()
-        spark.catalog.clearCache(); release_persisted_frames()
+        release_pins()
 
         best, best_jobs = float("inf"), None
         for r in range(runs):
@@ -95,7 +96,7 @@ def main() -> None:
             jobs = len(sc.statusTracker().getJobIdsForGroup(f"{name}-{r}"))
             if dt < best:
                 best, best_jobs = dt, jobs
-            spark.catalog.clearCache(); release_persisted_frames()
+            release_pins()
         # plan capture: build once more (unmaterialized) for explain
         df = fn(spark, sf_dir)
         import contextlib, io
@@ -109,7 +110,7 @@ def main() -> None:
             f.write(plan)
             f.write("\n-- census: " + json.dumps(c) + "\n")
             f.write(f"-- min-of-{runs}: {best:.3f}s, jobs(best run): {best_jobs}\n")
-        spark.catalog.clearCache(); release_persisted_frames()
+        release_pins()
         results[name] = {"sec": round(best, 3), "jobs": best_jobs, **c}
         print(f"{best:7.3f}s  jobs={best_jobs:3d}  Ex={c['Exchange']:2d}  Reused={c['ReusedExchange']}  Py={c['BatchEvalPython'] + c['ArrowEvalPython'] + c['MapInArrow/Pandas']}  {name}", flush=True)
 

@@ -20,7 +20,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from spark_streaming_practicum_spark.registry import all_queries
 from spark_streaming_practicum_spark.session import build_session
-from spark_streaming_practicum_spark.functions.ranks import release_persisted_frames
+from spark_streaming_practicum_spark.functions.pins import release_pins
 
 def main() -> None:
     thr = int(sys.argv[1]) if len(sys.argv) > 1 else 1500
@@ -40,8 +40,7 @@ def main() -> None:
         sizes[name] = n
         if n >= thr:
             print(f"{n:7d}  {name}", flush=True)
-        spark.catalog.clearCache()
-        release_persisted_frames()
+        release_pins()
     top = dict(sorted(sizes.items(), key=lambda kv: -kv[1])[:30])
     print(json.dumps({"sf_dir": sf_dir, "threshold": thr, "top30": top}))
     spark.stop()

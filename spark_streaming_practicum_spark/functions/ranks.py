@@ -26,72 +26,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-# Frames pinned for a caller must outlive the helper call (the returned
-# plan reads them when the CALLER materializes it), so they cannot be
-# released before returning. This bounded FIFO covers only frames
-# pinned through ``persisted()``: each new entry evicts the oldest
-# beyond _MAX_LIVE, so a 350+-query sweep holds at most _MAX_LIVE
-# cached frames. The cap is generous against the heaviest caller, so a
-# query's own frames are not evicted before its output materializes,
-# and even then a pending plan merely recomputes them.
-#
-# The rank and cumulative-sum helpers below pin with an untracked lazy
-# ``localCheckpoint`` instead; the ContextCleaner reclaims those blocks
-# once nothing references the checkpointed frame. A count-capped
-# release cannot cover checkpoints: a checkpoint has no lineage to
-# recompute from, so unpersisting one that a pending plan still reads
-# fails that job with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND (verified on
-# Spark 4.1.2).
-_live_persisted: list[DataFrame] = []
-_MAX_LIVE = 8
-
-
-def _track_persisted(df: DataFrame) -> DataFrame:
-    _live_persisted.append(df)
-    while len(_live_persisted) > _MAX_LIVE:
-        _live_persisted.pop(0).unpersist(blocking=False)
-    return df
-
-
-def persisted(df: DataFrame) -> DataFrame:
-    """Chain-friendly ``df.persist()`` routed through the bounded FIFO —
-    ``df.transform(persisted)`` instead of ``df.persist()``.
-
-    Operator-level persists used to rely on the bench/driver clearing
-    caches between queries; in a LONG-LIVED session a multi-query sweep
-    would accumulate storage memory without bound (round-3 advice).
-    Routing every operator persist here caps live cached frames at
-    ``_MAX_LIVE``; evicting a frame an un-materialized plan still
-    references merely recomputes it (speed, not correctness). Frames a
-    query unpersists itself (iterative loops) may be evicted again —
-    ``unpersist`` on a cold frame is a no-op, so double release is
-    harmless."""
-    return _track_persisted(df.persist())
-
-
-def unpersist_tracked(df: DataFrame) -> None:
-    """Unpersist a frame AND remove it from the FIFO's live list.
-
-    Iterative loops that release a superseded frame with a bare
-    ``df.unpersist()`` leave its (dead) entry occupying a FIFO slot, so
-    a loop of r rounds pushes r dead entries and evicts frames the
-    query STILL NEEDS (e.g. the edge frame a connected-components loop
-    re-joins every round) — each later round then recomputes that
-    lineage from scratch. Caught by bench --compare in round 4:
-    dedup_cluster_representatives 2.1 s -> 5.8 s after the FIFO
-    routing; this restores the loop's cache behavior while keeping the
-    bounded-cache policy for frames nobody releases."""
-    df.unpersist(blocking=False)
-    try:
-        _live_persisted.remove(df)
-    except ValueError:
-        pass
-
-
-def release_persisted_frames() -> None:
-    """Drop every helper-persisted frame (test/bench teardown hook)."""
-    while _live_persisted:
-        _live_persisted.pop().unpersist(blocking=False)
+from .pins import pin
 
 
 def _with_local_rank(
@@ -150,7 +85,7 @@ def global_row_number(
     partitioning (measured in r12: wrong xicor statistics whenever
     column pruning kept ReusedExchange from unifying the branches).
 
-    Round 13: the pin is a LAZY ``localCheckpoint`` instead of a
+    Round 13: the pin is a LAZY checkpoint (``pin``) instead of a
     persist. Same single materialization (the offset collect is still
     the first action — lazy checkpoint adds no job), same frozen
     boundaries, but (a) the lineage is TRUNCATED, so every consumer
@@ -166,7 +101,7 @@ def global_row_number(
     """
     spark = df.sparkSession
     P = partitions or spark.sparkContext.defaultParallelism
-    d = _with_local_rank(df, order_exprs, P).localCheckpoint(eager=False)
+    d = pin(_with_local_rank(df, order_exprs, P))
     sizes = {
         r["_pid"]: r["n"]
         for r in d.groupBy("_pid").agg(F.count(F.lit(1)).alias("n")).collect()
@@ -223,16 +158,16 @@ def global_cumulative_sums(
     array-literal + HOF ``filter`` assignment is interpreted, ~4·P
     lambda calls per row per consumer.
 
-    Round 13: the boundary pin is a lazy ``localCheckpoint`` (same
+    Round 13: the boundary pin is a lazy checkpoint (``pin``; same
     rationale and A/B as ``global_row_number`` above: no extra job,
     truncated lineage for every consumer, and the pin cannot be
     evicted into a boundary-resampling recompute)."""
     spark = df.sparkSession
     P = partitions or spark.sparkContext.defaultParallelism
-    d = (
-        df.repartitionByRange(P, *order_exprs)
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=False)
+    d = pin(
+        df.repartitionByRange(P, *order_exprs).withColumn(
+            "_pid", F.spark_partition_id()
+        )
     )
     from decimal import Decimal
 

@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import table
-from ..functions.ranks import persisted as _persisted
+from ..functions.pins import pin
 from ..functions.textfns import poly_hash
 from ..registry import query
 
@@ -1020,7 +1020,7 @@ def sketch_quantile_mergeable(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("int")
             .alias("b"),
         )
-        .transform(_persisted)
+        .transform(pin)
     )
 
     def summarize(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -1051,7 +1051,7 @@ def sketch_quantile_mergeable(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("c").over(
             _W.orderBy("v", "b", "ci").rowsBetween(_W.unboundedPreceding, 0)
         ),
-    ).transform(_persisted)
+    ).transform(pin)
     n_row = vals.groupBy().agg(F.count(F.lit(1)).cast("bigint").alias("n"))
     qs = spark.createDataFrame([(q,) for q in _QS_QS], "q double")
     targets = qs.crossJoin(F.broadcast(n_row)).select(
@@ -1298,7 +1298,7 @@ def sketch_count_min_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         table(spark, sf_dir, "events")
         .groupBy(F.col("user_id").alias("k"))
         .agg(F.count(F.lit(1)).alias("c"))
-        .transform(_persisted)
+        .transform(pin)
     )
 
     def pos(col, i):
@@ -1336,7 +1336,7 @@ def sketch_count_min_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         probes.join(F.broadcast(cells), ["r", "pos"])
         .groupBy("k", "c")
         .agg(F.min("v").alias("est"))
-        .transform(_persisted)
+        .transform(pin)
     )
     cert = F.broadcast(
         est.agg(

@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 from ..catalog import table
 from ..functions.aggs import davg, davg_sql, dsum, dsum_sql
 from ..registry import query
-from ..functions.ranks import persisted as _persisted
+from ..functions.pins import pin
 
 
 @query(
@@ -778,7 +778,7 @@ def distinct_methods_comparison(spark: SparkSession, sf_dir: str) -> DataFrame:
     comparable while actually derived from the estimator output. One
     scan feeds all three aggregates via three branches over the same
     cached projection."""
-    e = table(spark, sf_dir, "events").select("user_id").transform(_persisted)
+    e = table(spark, sf_dir, "events").select("user_id").transform(pin)
     exact = e.agg(F.countDistinct("user_id").alias("n"))
     bitmap = (
         e.select(

@@ -19,7 +19,7 @@ from ..catalog import table
 from ..functions.aggs import dsum, dsum_sql
 from ..functions.textfns import poly_hash
 from ..registry import query
-from ..functions.ranks import persisted as _persisted
+from ..functions.pins import pin
 
 
 @query(
@@ -201,7 +201,7 @@ def basket_part_pairs_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
         table(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey")
         .distinct()
-        .transform(_persisted)
+        .transform(pin)
     )
     n = po.agg(
         F.count_distinct("l_orderkey").cast("double").alias("cnt")
@@ -262,10 +262,14 @@ def rfm_customer_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     three. The rollup is melted to (c_custkey, mid, val) — 3N rows,
     with each metric mapped to DOUBLE (timestamps via unix_micros;
     counts and epoch-microsecond values are integers < 2^53, so their
-    cast is injective; ``monetary`` is order-consistent with the oracle
-    only because Spark and DuckDB rank the identical
-    ``CAST(... AS DOUBLE)`` value) — and ranked once by
-    (mid, val DESC, c_custkey). Every
+    cast is injective) — and ranked once by
+    (mid, val DESC, c_custkey). The ``monetary`` cast is injective too,
+    within a stated bound: each ``o_totalprice`` carries two decimals,
+    so every per-customer DECIMAL sum is a multiple of 0.01, and
+    doubles below 2^46 lie at most 2^-7 < 0.01 apart, so
+    ``CAST(... AS DOUBLE)`` keeps distinct sums distinct (and ordered)
+    for |monetary| < 2^46 ≈ 7·10^13. The largest sum at sf0.1 is
+    7,371,501.10 (measured with DuckDB). Every
     metric contributes exactly N rows (the rollup has no NULLs by
     construction: inner join, then MAX/COUNT/SUM over >=1 order), so
     the within-metric rank is global_rn - mid*N and NTILE(4) is the
@@ -287,7 +291,7 @@ def rfm_customer_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("frequency"),
             F.sum(F.col("o_totalprice").cast("decimal(38,6)")).cast("double").alias("monetary"),
         )
-        .transform(_persisted)
+        .transform(pin)
     )
 
     def metric_slice(mid: int, value: Column) -> DataFrame:
@@ -2190,7 +2194,7 @@ def spearman_rank_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pts = table(spark, sf_dir, "lineitem").select(
         F.col("l_quantity").alias("x"), F.col("l_extendedprice").alias("y")
-    ).transform(_persisted)
+    ).transform(pin)
 
     def ranks(col: str) -> DataFrame:
         pv = pts.groupBy(col).agg(F.count(F.lit(1)).cast("long").alias("c"))
@@ -2350,7 +2354,7 @@ def scd2_incremental_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
             vto.isNull().alias("is_current"),
         )
 
-    dim = runs(hist.select("user_id", "event_id", "ts", "event_type")).transform(_persisted)
+    dim = runs(hist.select("user_id", "event_id", "ts", "event_type")).transform(pin)
     closed = dim.filter(~F.col("is_current"))
     open_v = dim.filter(F.col("is_current"))
     touched = delta.select("user_id").distinct()
@@ -3996,7 +4000,7 @@ def ab_permutation_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     by_arm = melted.groupBy("rep", "bit").agg(
         F.sum("su").alias("s"), F.sum("cu").alias("n")
     )
-    # persisted: both the observed-diff branch and the replicate branch
+    # pinned: both the observed-diff branch and the replicate branch
     # read this ({_PERM_R}+1)-row frame — without the pin each branch
     # would re-run the events scan + aggregate.
     diffs = by_arm.groupBy("rep").agg(
@@ -4006,7 +4010,7 @@ def ab_permutation_test(spark: SparkSession, sf_dir: str) -> DataFrame:
             - F.sum(F.when(F.col("bit") == 0, F.col("s"))).cast("double")
             / F.sum(F.when(F.col("bit") == 0, F.col("n")).otherwise(0))
         ).alias("d")
-    ).transform(_persisted)
+    ).transform(pin)
     obs = diffs.filter(F.col("rep") == -1).select(F.col("d").alias("obs"))
     n_ext = F.sum((F.abs(F.col("d")) >= F.abs(F.col("obs"))).cast("int"))
     return (
@@ -4068,7 +4072,7 @@ def basket_apriori_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     it = (
         d.select("doc_id", F.explode(F.array_distinct(F.split("text", " "))).alias("t"))
-        .transform(_persisted)
+        .transform(pin)
     )
     n_docs = it.select("doc_id").distinct().count()
     minsup = math.ceil(_APRIORI_MINSUP_FRAC * n_docs)
@@ -4090,14 +4094,14 @@ def basket_apriori_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("a.t").alias("ia"),
             F.col("b.t").alias("ib"),
         )
-        .transform(_persisted)
+        .transform(pin)
     )
     l2 = (
         pd.groupBy("ia", "ib")
         .agg(F.count(F.lit(1)).alias("c"))
         .filter(F.col("c") >= minsup)
         .select("ia", "ib")
-        .transform(_persisted)
+        .transform(pin)
     )
     # C3: join L2 pairs sharing the first item; downward-closure prune
     # on the (b, c) suffix pair.
@@ -4227,7 +4231,7 @@ def robust_theil_sen_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
         [F.col("x").asc(), F.col("l_orderkey").asc(), F.col("l_linenumber").asc()],
         rn_name="rn",
     )
-    rk = rk.select("x", "y", "rn").transform(_persisted)
+    rk = rk.select("x", "y", "rn").transform(pin)
     a = rk.select(
         F.col("rn").alias("rna"), F.col("x").alias("xa"), F.col("y").alias("ya")
     )
@@ -4242,7 +4246,7 @@ def robust_theil_sen_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
         pairs = p if pairs is None else pairs.unionByName(p)
     slopes = pairs.select(
         ((F.col("yb") - F.col("ya")) / (F.col("xb") - F.col("xa"))).alias("s")
-    ).transform(_persisted)
+    ).transform(pin)
 
     # Exact medians via the distributed rank helper, NOT the built-in
     # exact `percentile` aggregate — that aggregate ships every value
@@ -4395,7 +4399,7 @@ def attribution_markov_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.join(cut, "user_id", "left")
         .filter(F.col("crn").isNull() | (F.col("rn") <= F.col("crn")))
         .select("user_id", "st", "rn")
-        .transform(_persisted)
+        .transform(pin)
     )
     mx = j.groupBy("user_id").agg(F.max("rn").alias("mrn"))
     last = j.join(mx, "user_id").filter(

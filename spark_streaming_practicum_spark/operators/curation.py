@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 from ..catalog import table
 from ..functions.textfns import poly_hash, shingles, tokens
 from ..registry import query
-from ..functions.ranks import persisted as _persisted
+from ..functions.pins import pin
 from .training import _bucket, _bucket_sql
 
 _WORDS_SQL = "SELECT doc_id, string_split(text, ' ') AS w FROM documents"
@@ -231,7 +231,7 @@ def dedup_crossdoc_ngram_coverage(spark: SparkSession, sf_dir: str) -> DataFrame
     )
     sh = d.select("doc_id", tokens(F.col("text")).alias("_w")).select(
         "doc_id", F.explode(shingles(F.col("_w"), 5)).alias("g")
-    ).transform(_persisted)
+    ).transform(pin)
     docfreq = sh.groupBy("g").agg(F.count_distinct("doc_id").alias("df"))
     dup = F.sum(F.when(F.col("df") >= 2, 1).otherwise(0))
     return (
@@ -686,7 +686,7 @@ def boilerplate_domain_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan as count_distinct aggregates (map-side partial distinct), so
     NO text bytes are ever shuffled — the previous shape paid a full
     doc_id repartition of the corpus plus a 3-column distinct exchange
-    of every segment before aggregating (and, unpersisted, computed
+    of every segment before aggregating (and, unpinned, computed
     that distinct once per consumer branch). n_seg_docs =
     COUNT(DISTINCT doc_id) per (source, seg) is definitionally the
     COUNT(*) the oracle takes over the distinct segs; measured at
@@ -902,7 +902,7 @@ def curation_attrition_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("dupf") < 0.2).alias("r_ok"),
             (F.col("doc_id") == F.min("doc_id").over(w_first)).alias("first_occ"),
         )
-        .transform(_persisted)
+        .transform(pin)
     )
     tot = flags.agg(F.count(F.lit(1)).alias("n0"))
 

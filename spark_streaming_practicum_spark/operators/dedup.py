@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 from ..catalog import table
 from ..functions.textfns import poly_hash, shingles, tokens
 from ..registry import query
-from ..functions.ranks import persisted as _persisted
+from ..functions.pins import pin
 from .ml import _ASSIGN_SQL as _KM_ASSIGN_SQL
 from .ml import _UPDATE_SQL as _KM_UPDATE_SQL
 
@@ -90,11 +90,11 @@ def dedup_keep_first_ts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # set and the exact certificate slice are pure functions of (lake, code
 # version), so computing them once per session is the honest cost
 # model, and at 100 TB it is the only sane one (nobody re-shingles the
-# corpus per audit query). Frames are materialized with localCheckpoint:
-# unlike persist(), checkpoint blocks are NOT tracked by the
-# CacheManager, so the cross-query `spark.catalog.clearCache()` hygiene
-# in bench/tests can't evict them, and lineage truncation keeps
-# downstream plans from re-running the upstream joins. Keyed by
+# corpus per audit query). Frames are materialized with an eager
+# localCheckpoint that is deliberately NOT a ``pin``: the cross-query
+# ``release_pins()`` at every query boundary in bench/tests frees pins
+# but never these blocks, and lineage truncation keeps downstream plans
+# from re-running the upstream joins. Keyed by
 # applicationId so a fresh session (fresh code, fresh lake) never sees
 # a stale frame. All memoized frames are small: shingles are
 # O(corpus tokens) and pair sets are O(true near-dup pairs). The store
@@ -109,6 +109,7 @@ def _session_memo(spark: SparkSession, sf_dir: str, tag: str, build) -> DataFram
     key = (spark.sparkContext.applicationId, sf_dir, tag)
     cached = _session_memo_store.get(key)
     if cached is None:
+        # not pin(): session lifetime, must survive release_pins()
         cached = build().localCheckpoint(eager=True)
         _session_memo_store[key] = cached
         while len(_session_memo_store) > _SESSION_MEMO_CAP:
@@ -410,17 +411,16 @@ def _jaccard_pairs_ppjoin(sh: DataFrame, t: float = 0.8) -> DataFrame:
     ).select("doc_id", "shingle", "c")
     a = prefix.select(F.col("doc_id").alias("doc_a"), "shingle", F.col("c").alias("ca"))
     b = prefix.select(F.col("doc_id").alias("doc_b"), "shingle", F.col("c").alias("cb"))
-    candidates = (
+    candidates = pin(
         a.join(b, "shingle")
         .filter(
             (F.col("doc_a") < F.col("doc_b"))
             & (F.least("ca", "cb") >= t * F.greatest("ca", "cb"))  # size filter
         )
         .select("doc_a", "doc_b")
-        .distinct()
-        .transform(_persisted)
+        .distinct(),
+        eager=True,  # feeds pruning, verification and the final join
     )
-    candidates.count()  # eager: feeds pruning, verification and the final join
     cand_docs = (
         candidates.select(F.col("doc_a").alias("doc_id"))
         .union(candidates.select(F.col("doc_b").alias("doc_id")))
@@ -573,17 +573,16 @@ def _minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     left = bands.select(F.col("doc_id").alias("doc_a"), "band", "sig")
     right = bands.select(F.col("doc_id").alias("doc_b"), "band", "sig")
-    # Persisted: the candidate set feeds the doc-pruning semi-join, the
+    # Pinned: the candidate set feeds the doc-pruning semi-join, the
     # verification join AND the final output join — without a cache the
     # whole band-join subtree would re-execute for each consumer.
-    candidates = (
+    candidates = pin(
         left.join(right, ["band", "sig"])
         .filter(F.col("doc_a") < F.col("doc_b"))
         .select("doc_a", "doc_b")
-        .distinct()
-        .transform(_persisted)
+        .distinct(),
+        eager=True,  # for the same multi-branch reason as above
     )
-    candidates.count()  # eager, for the same multi-branch reason as above
     # Verify candidates with exact Jaccard keyed BY the candidate pairs
     # (round-7: _jaccard_for_pairs replaces the pruned corpus-pair join
     # + post-intersect — identical output, O(|candidates|) cost; the df
@@ -797,16 +796,15 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # a pure function of (lake, hash family, thresholds) and O(true
     # pairs) small — session-memoize it like the cert slice.
     def build_verified() -> DataFrame:
-        # Persist + eager-materialize the banded-candidate frame so the
+        # Eagerly pin the banded-candidate frame so the
         # verifier's pair joins read it instead of re-running its
         # upstream (bit-sum aggregate + band self-join), the most
         # expensive subtree in the op.
-        cand = (
+        cand = pin(
             _simhash_candidates(spark, sf_dir)
-            .select("doc_a", "doc_b")
-            .transform(_persisted)
+            .select("doc_a", "doc_b"),
+            eager=True,
         )
-        cand.count()
         return _jaccard_for_pairs(
             spark, sf_dir, cand, threshold=0.8, join_df_cap=JACCARD_DF_CAP
         ).select("doc_a", "doc_b")
@@ -963,7 +961,7 @@ def dedup_cluster_representatives(spark: SparkSession, sf_dir: str) -> DataFrame
     CC pattern. Oracle: DuckDB recursive-CTE transitive closure.
 
     Round 13 (guide §5.4, r12 verdict item 5): the edge set and each
-    round's labels are pinned with localCheckpoint instead of persist.
+    round's labels are pinned (eager ``pin``) instead of persist():
     persist caches blocks but does NOT cut lineage, so every round's
     plan re-embedded the full shingle/jaccard subtree and the composed
     queries built ~12,000-line physical plans (1,038 Exchange nodes in
@@ -984,7 +982,7 @@ def dedup_cluster_representatives(spark: SparkSession, sf_dir: str) -> DataFrame
             pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
         )
         .repartition(n_parts, "doc_b")
-        .localCheckpoint(eager=True)
+        .transform(pin, eager=True)
     )
 
     docs = table(spark, sf_dir, "documents").select("doc_id")
@@ -996,7 +994,7 @@ def dedup_cluster_representatives(spark: SparkSession, sf_dir: str) -> DataFrame
     labels = (
         edge_docs.repartition(n_parts, "doc_id")
         .withColumn("root", F.col("doc_id"))
-        .localCheckpoint(eager=True)
+        .transform(pin, eager=True)
     )
 
     from pyspark.sql import Observation
@@ -1025,7 +1023,7 @@ def dedup_cluster_representatives(spark: SparkSession, sf_dir: str) -> DataFrame
                 F.sum((F.col("old_root") != F.col("root")).cast("long")).alias("n_changed"),
             )
             .drop("old_root")
-            .localCheckpoint(eager=True)
+            .transform(pin, eager=True)
         )
         changed = obs.get["n_changed"] or 0
         labels = new_labels
@@ -1216,7 +1214,7 @@ def semdedup_cluster_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Three consumers (both pair-join sides + the final rollup) would each
     # recompute the 2-round Lloyd lineage — materialize the assignment once.
-    assign1 = _assign(vecs, _update(_assign(vecs, cents0))).transform(_persisted)
+    assign1 = _assign(vecs, _update(_assign(vecs, cents0))).transform(pin)
 
     # Within-cluster pruning as ONE numpy GEMM per cluster (the same
     # Arrow-batched pattern as dedup_embedding_cosine): the round-4
@@ -1476,7 +1474,7 @@ def dedup_bloom_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).distinct()
     # seg feeds five branches (bit build, probe, exact verify, the
     # bloom-guarantee anti-join, and the probe count); it is
-    # DELIBERATELY not persisted — measured round-7 at sf0.1: the
+    # DELIBERATELY not pinned — measured round-7 at sf0.1: the
     # codegen'd split+md5 explode recomputes in 1.8 s warm across all
     # branches, while persisting seg costs 2.1-2.6 s (materialization
     # + per-consumer loss of column pruning). The round-6 --compare
@@ -1496,7 +1494,7 @@ def dedup_bloom_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     bits = (
         corpus.select(F.explode(bit_positions(F.col("h"))).alias("pos"))
         .distinct()
-        .transform(_persisted)
+        .transform(pin)
     )
     n_bits_set = bits.count()  # scalar: drives the FP bound below
     # probe: a key passes the filter iff ALL of its k positions are set
@@ -1509,7 +1507,7 @@ def dedup_bloom_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count_distinct("i").alias("nh"))
         .filter(F.col("nh") == BLOOM_K)
         .select("doc_id", "h")
-        .transform(_persisted)
+        .transform(pin)
     )
     corpus_keys = corpus.select("h").distinct()
     verified = cand.join(corpus_keys, "h", "left_semi")
@@ -1729,7 +1727,7 @@ def linkage_fellegi_sunter_em(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines produce identical updates. ALL M-step sums ride ONE
     aggregate over the pair frame (2 sums per field + 3 shared terms
     in a single hash-agg), reshaped to per-field rows by a bounded
-    explode — one scan, one job, no persisted intermediate to evict
+    explode — one scan, one job, no pinned intermediate
     (round-2 ran three agg jobs over a cached pair frame, the bench's
     highest-variance query)."""
     c = table(spark, sf_dir, "customer").select(
@@ -1962,7 +1960,7 @@ def dedup_pair_explanation(spark: SparkSession, sf_dir: str) -> DataFrame:
     reviewer (or an appeals process for takedown/dedup decisions)
     needs, which a bare similarity score doesn't provide.
 
-    Reuses the shared shingle relation (one persisted build feeds
+    Reuses the shared shingle relation (one memoized build feeds
     scoring AND evidence); evidence extraction joins only the <=5
     selected pairs (broadcast) back to the inverted index, so the
     explanation pass costs |top pairs| x shingles-per-doc, never
@@ -2424,11 +2422,10 @@ def symspell_delete_keys(names: DataFrame) -> DataFrame:
 def symspell_edit1_pairs(names: DataFrame) -> DataFrame:
     """Distinct (name_a, name_b) pairs at Levenshtein distance exactly
     1, via the delete-key equi-join."""
-    # Persist + materialize the delete-key frame: both self-join sides
+    # Eagerly pin the delete-key frame: both self-join sides
     # read it, and its upstream (distinct names + per-char deletion HOF
     # explode) would otherwise run twice. O(total chars) rows.
-    keys = symspell_delete_keys(names).transform(_persisted)
-    keys.count()
+    keys = pin(symspell_delete_keys(names), eager=True)
     a = keys.select(F.col("t").alias("name_a"), "k")
     b = keys.select(F.col("t").alias("name_b"), "k")
     # levenshtein BEFORE distinct: the edit-distance check is a cheap

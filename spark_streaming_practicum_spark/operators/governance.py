@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..registry import query
-from ..functions.ranks import persisted as _persisted
+from ..functions.pins import pin
 
 # Deterministic "two snapshots of the same table" derivation, shared by
 # the Spark plan and the DuckDB oracle: the old snapshot is orders minus
@@ -875,7 +875,7 @@ def gdpr_erasure_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("user_id") % 97 == 0)
         .select("user_id")
         .distinct()
-        .transform(_persisted)
+        .transform(pin)
     )
     n_req = req.count()
 

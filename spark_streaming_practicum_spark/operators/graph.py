@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..registry import query
-from ..functions.ranks import persisted as _persisted
+from ..functions.pins import pin
 
 _DAMPING = 0.85
 _ITERATIONS = 3
@@ -77,7 +77,7 @@ def graph_pagerank_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan shape per iteration: edges(src,dst,p) join labels on src ->
     partial-sum on dst -> left join back to the node set. Edge
     normalization is a window over src (one shuffle, computed once and
-    persisted); each iteration then shuffles only (node, pr) pairs —
+    pinned); each iteration then shuffles only (node, pr) pairs —
     O(V) rows — plus the edge join keyed on src. On a 1000-executor
     cluster the edge table is hash-partitioned once and reused every
     round; node vectors are broadcast-small for most real graphs.
@@ -98,10 +98,12 @@ def graph_pagerank_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.count(F.lit(1)).cast("double").alias("w"))
     )
-    enorm = edges.select(
-        "src", "dst", (F.col("w") / F.sum("w").over(Window.partitionBy("src"))).alias("p")
-    ).transform(_persisted)
-    enorm.count()
+    enorm = pin(
+        edges.select(
+            "src", "dst", (F.col("w") / F.sum("w").over(Window.partitionBy("src"))).alias("p")
+        ),
+        eager=True,
+    )
 
     n = nation.count()  # 25-row dim: a driver-side scalar, like any broadcast dim
     nodes = nation.select(F.col("n_nationkey").alias("node"))
@@ -119,9 +121,8 @@ def graph_pagerank_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
                 + F.lit(_DAMPING) * F.coalesce("inflow", F.lit(0.0))
             ).alias("pr"),
         )
-    # enorm stays persisted until the caller's action completes (the
-    # bench / driver clear caches between queries); unpersisting here
-    # would force the final plan to recompute all three edge joins.
+    # enorm stays pinned until release_pins() at the query boundary: the
+    # final plan reads it instead of recomputing all three edge joins.
     return pr.join(F.broadcast(nation), pr.node == nation.n_nationkey).select(
         F.col("n_name").alias("nation"), F.round("pr", 6).alias("pagerank")
     )
@@ -274,24 +275,20 @@ def _lpa_oracle() -> str:
     )
 
 
-@query("graph_label_propagation", oracle=_lpa_oracle())
-def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Community detection by synchronous label propagation (2 rounds)
-    on the symmetrized trade graph: every node adopts the label with
-    the largest incident edge weight among its neighbors, ties broken
-    by the smaller label — fully deterministic, unlike the textbook
-    randomized LPA, so both engines converge to identical communities.
-
-    Per round the plan is edges⋈labels → per-(node, label) weight sum →
-    per-node argmax window — the same O(E) shuffle topology as the
-    PageRank op, with the V-sized label vector as the only iterated
-    state. Edge weights are integer counts, so weight sums never suffer
-    float reordering."""
+def _lpa_labels(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """(sym, lab): the pinned symmetrized trade-edge frame and the
+    pinned (node, label) frame after the LPA rounds. Shared by
+    graph_label_propagation and graph_modularity_score, so the
+    modularity score reuses the same pinned edges. Every frame joined
+    here is |V|-sized (nationkey, <= 25 rows at any scale), hence the
+    broadcasts: a pin's size estimate is inherited from the 4-way
+    lineitem join upstream and would otherwise plan a sort-merge join
+    that AQE demotes only after an extra shuffle job per round."""
     li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     o = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     c = table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     s = table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    nation = table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    nation = table(spark, sf_dir, "nation").select("n_nationkey")
 
     edges = (
         li.join(o, li.l_orderkey == o.o_orderkey)
@@ -302,7 +299,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.count(F.lit(1)).cast("double").alias("w"))
     )
-    sym = (
+    sym = pin(
         edges.select("src", "dst", "w")
         .unionByName(
             edges.select(
@@ -310,17 +307,16 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         .groupBy("src", "dst")
-        .agg(F.sum("w").alias("w"))
-        .transform(_persisted)
+        .agg(F.sum("w").alias("w")),
+        eager=True,  # materialize once; every round re-reads the edge set
     )
-    sym.count()  # materialize once; every round re-reads the edge set
 
     lab = nation.select(
         F.col("n_nationkey").alias("node"), F.col("n_nationkey").alias("label")
     )
     for _ in range(_LPA_ROUNDS):
         wsum = (
-            sym.join(lab, sym.src == lab.node)
+            sym.join(F.broadcast(lab), sym.src == lab.node)
             .groupBy(F.col("dst").alias("nbr_node"), "label")
             .agg(F.sum("w").alias("wsum"))
         )
@@ -335,12 +331,30 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
         # localCheckpoint per round: `lab` feeds both the message join
         # and the carry-forward left join — see graph_kcore_peel.
         lab = (
-            lab.join(best, lab.node == best.nbr_node, "left")
+            lab.join(F.broadcast(best), lab.node == best.nbr_node, "left")
             .select(
                 "node", F.coalesce("best_label", "label").alias("label")
             )
-            .localCheckpoint(eager=True)
+            .transform(pin, eager=True)
         )
+    return sym, lab
+
+
+@query("graph_label_propagation", oracle=_lpa_oracle())
+def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Community detection by synchronous label propagation (2 rounds)
+    on the symmetrized trade graph: every node adopts the label with
+    the largest incident edge weight among its neighbors, ties broken
+    by the smaller label — fully deterministic, unlike the textbook
+    randomized LPA, so both engines converge to identical communities.
+
+    Per round the plan is edges⋈labels → per-(node, label) weight sum →
+    per-node argmax window — the same O(E) shuffle topology as the
+    PageRank op, with the V-sized label vector as the only iterated
+    state. Edge weights are integer counts, so weight sums never suffer
+    float reordering."""
+    _, lab = _lpa_labels(spark, sf_dir)
+    nation = table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     return (
         lab.join(F.broadcast(nation), lab.node == nation.n_nationkey)
         .select(
@@ -489,39 +503,12 @@ def graph_modularity_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     wiring (Q near 0) or found real structure. Running a partition
     WITHOUT scoring it is how bad communities ship.
 
-    Reuses the LPA rounds, then three small aggregates on the edge and
+    Reuses the LPA rounds and their pinned edge frame, then three small aggregates on the edge and
     degree frames: within-community weight via two node-keyed label
     joins, per-community degree mass via one more; the quadratic term
     sums over the handful of communities in DECIMAL."""
-    # Rebuild the LPA pipeline (same deterministic rounds).
-    lpa = graph_label_propagation(spark, sf_dir)
-    nation = table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    comm = lpa.join(F.broadcast(nation), lpa.nation == nation.n_name).select(
-        F.col("n_nationkey").alias("node"), F.col("community").alias("label")
-    )
-
-    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    s = table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    edges = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
-        .groupBy(
-            F.col("c_nationkey").alias("src"), F.col("s_nationkey").alias("dst")
-        )
-        .agg(F.count(F.lit(1)).cast("double").alias("w"))
-    )
-    sym = (
-        edges.select("src", "dst", "w")
-        .unionByName(
-            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "w")
-        )
-        .groupBy("src", "dst")
-        .agg(F.sum("w").alias("w"))
-        .transform(_persisted)
-    )
+    sym, lab = _lpa_labels(spark, sf_dir)
+    comm = lab.select("node", F.col("label").cast("bigint").alias("label"))
     m2 = sym.agg(F.sum("w").cast("double").alias("m2"))
     deg = sym.groupBy("src").agg(F.sum("w").cast("double").alias("k"))
     ca = comm.select(F.col("node").alias("src"), F.col("label").alias("la"))
@@ -631,10 +618,10 @@ def graph_sssp_bellman_ford(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("c_nationkey").alias("src"), F.col("s_nationkey").alias("dst"))
         .agg(F.count(F.lit(1)).alias("w"))
     )
-    cost = edges.select(
-        "src", "dst", F.expr(f"{_SSSP_SCALE} div w").alias("c")
-    ).transform(_persisted)
-    cost.count()  # materialize once; every round re-reads it
+    cost = pin(
+        edges.select("src", "dst", F.expr(f"{_SSSP_SCALE} div w").alias("c")),
+        eager=True,  # materialize once; every round re-reads it
+    )
 
     d = n.select(
         F.col("n_nationkey").alias("node"),
@@ -644,9 +631,12 @@ def graph_sssp_bellman_ford(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("dist"),
     )
     for _ in range(_SSSP_ROUNDS):
+        # d is |V| rows; the hint keeps the pinned cost frame's inherited
+        # (lineitem-sized) estimate from planning a sort-merge join
         relax = (
             cost.join(
-                d.filter(F.col("dist") < _SSSP_INF), cost.src == F.col("node")
+                F.broadcast(d.filter(F.col("dist") < _SSSP_INF)),
+                cost.src == F.col("node"),
             )
             .groupBy("dst")
             .agg(F.min(F.col("dist") + F.col("c")).alias("best"))
@@ -664,7 +654,7 @@ def graph_sssp_bellman_ford(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.coalesce(F.col("best"), F.lit(_SSSP_INF).cast("long")),
                 ).alias("dist"),
             )
-            .localCheckpoint(eager=True)
+            .transform(pin, eager=True)
         )
     return (
         d.filter(F.col("dist") < _SSSP_INF)
@@ -740,10 +730,12 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("src") != F.col("dst"))
         .select("src", "dst")
     )
-    sym = edges.unionByName(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct().transform(_persisted)
-    sym.count()
+    sym = pin(
+        edges.unionByName(
+            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        ).distinct(),
+        eager=True,
+    )
     nodes = sym.select(F.col("src").alias("node")).distinct()
     deg = None
     for _ in range(_KCORE_ROUNDS):
@@ -760,7 +752,7 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
         nodes = (
             deg.filter(F.col("deg") >= _KCORE_K)
             .select(F.col("src").alias("node"))
-            .localCheckpoint(eager=True)
+            .transform(pin, eager=True)
         )
     return (
         deg.join(nodes, deg.src == nodes.node)
@@ -824,7 +816,7 @@ def graph_topo_layers(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     c = table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     s = table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    dag = (
+    dag = pin(
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(c, o.o_custkey == c.c_custkey)
         .join(s, li.l_suppkey == s.s_suppkey)
@@ -832,10 +824,9 @@ def graph_topo_layers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("c_nationkey").alias("src"), F.col("s_nationkey").alias("dst")
         )
-        .distinct()
-        .transform(_persisted)
+        .distinct(),
+        eager=True,  # the init branch and the node set share the edge scan
     )
-    dag.count()  # the init branch and the node set share the edge scan
     nodes = (
         dag.select(F.col("src").alias("v"))
         .union(dag.select(F.col("dst").alias("v")))
@@ -848,7 +839,7 @@ def graph_topo_layers(spark: SparkSession, sf_dir: str) -> DataFrame:
     # self-join no matter the data scale.
     paths = dag.select(
         "src", "dst", F.lit(1).cast("long").alias("len")
-    ).localCheckpoint(eager=True)
+    ).transform(pin, eager=True)
     prev: tuple | None = None
     # depth <= |V| - 1 = 24 (acyclic by src < dst), so 6 doublings
     # (2^6 = 64) always reach the fixpoint; the observe() break fires
@@ -857,7 +848,7 @@ def graph_topo_layers(spark: SparkSession, sf_dir: str) -> DataFrame:
         obs = Observation(f"topo_double_{i}")
         composed = (
             paths.alias("p")
-            .join(paths.alias("q"), F.col("p.dst") == F.col("q.src"))
+            .join(F.broadcast(paths.alias("q")), F.col("p.dst") == F.col("q.src"))
             .select(
                 F.col("p.src").alias("src"),
                 F.col("q.dst").alias("dst"),
@@ -873,7 +864,7 @@ def graph_topo_layers(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum("len").alias("tot"),
                 F.count(F.lit(1)).alias("cnt"),
             )
-            .localCheckpoint(eager=True)
+            .transform(pin, eager=True)
         )
         paths = nxt
         sig = (obs.get["tot"], obs.get["cnt"])
@@ -973,7 +964,7 @@ def graph_hits_hubs_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("c_nationkey").alias("src"), F.col("s_nationkey").alias("dst")
         )
         .agg(F.count(F.lit(1)).cast("double").alias("w"))
-        .transform(_persisted)
+        .transform(pin)
     )
     nodes = n.select(F.col("n_nationkey").alias("node"))
     a = nodes.withColumn("a", F.lit(1.0))
@@ -999,7 +990,7 @@ def graph_hits_hubs_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
         h = (
             hraw.crossJoin(F.broadcast(hmax))
             .select("node", (F.col("h") / F.col("m")).alias("h"))
-            .localCheckpoint(eager=True)
+            .transform(pin, eager=True)
         )
         araw = (
             nodes.join(
@@ -1015,7 +1006,7 @@ def graph_hits_hubs_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
         a = (
             araw.crossJoin(F.broadcast(amax))
             .select("node", (F.col("a") / F.col("m")).alias("a"))
-            .localCheckpoint(eager=True)
+            .transform(pin, eager=True)
         )
     return (
         h.join(a, "node")
@@ -1091,13 +1082,12 @@ def graph_random_walk_deterministic(spark: SparkSession, sf_dir: str) -> DataFra
     edge list, embarrassingly parallel in the start-node key."""
     li = table(spark, sf_dir, "lineitem")
     o = table(spark, sf_dir, "orders")
-    edges = (
+    edges = pin(
         li.join(o, li.l_orderkey == o.o_orderkey)
         .select(F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s"))
-        .distinct()
-        .transform(_persisted)
+        .distinct(),
+        eager=True,  # materialize once; all three hops re-read the edge set
     )
-    edges.count()  # materialize once; all three hops re-read the edge set
 
     def argmin_hop(df, part_col, prev_col, cand_col, step, keep, out_name):
         w = Window.partitionBy(part_col).orderBy(
@@ -1185,7 +1175,7 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     node-iterator triangle layout plus one keyed degree count — no
     per-node adjacency materialization."""
     nation = table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    und = _topk_trade_und(spark, sf_dir).transform(_persisted)
+    und = _topk_trade_und(spark, sf_dir).transform(pin)
     sym = und.select(F.col("a").alias("node")).unionAll(und.select(F.col("b").alias("node")))
     deg = sym.groupBy("node").agg(F.count(F.lit(1)).alias("degree"))
     e1, e2, e3 = und.alias("e1"), und.alias("e2"), und.alias("e3")
@@ -1367,7 +1357,7 @@ def graph_katz_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
         .select(F.col("c_nationkey").alias("src"), F.col("s_nationkey").alias("dst"))
         .distinct()
-        .transform(_persisted)
+        .transform(pin)
     )
     nodes = n.select(F.col("n_nationkey").alias("node"))
     x = nodes.withColumn("x", F.lit(1.0))

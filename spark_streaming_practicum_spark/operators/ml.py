@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..registry import query
-from ..functions.ranks import persisted as _persisted
+from ..functions.pins import pin
 
 _K = 4
 
@@ -296,7 +296,7 @@ def pca_power_iteration_top_pc(spark: SparkSession, sf_dir: str) -> DataFrame:
     exploded cells). Every subsequent step — the d^2-row matrix-vector
     products, the d-row normalizations — is constant-size regardless of
     corpus, so iterations add zero corpus scans. The cov matrix is
-    persisted across the 3 iterations.
+    pinned across the 3 iterations.
 
     Determinism: fixed uniform start vector, fixed iteration count
     (convergence is irrelevant to parity — both engines take the same 3
@@ -344,7 +344,7 @@ def pca_power_iteration_top_pc(spark: SparkSession, sf_dir: str) -> DataFrame:
         # cache BEFORE the symmetric mirror: the union below references
         # this lineage twice, and the 3 iterations re-join it — with the
         # cache boundary here the corpus parquet is scanned exactly once
-        .transform(_persisted)
+        .transform(pin)
     )
     c = (
         F.col("sxy") / F.col("n")
@@ -423,7 +423,7 @@ def _logreg_sigmoid(z):
 def _logreg_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(y, p, a, b, c) per training row after two broadcast-GD steps —
     the Spark mirror of the ``scored`` CTE above. The feature frame is
-    persisted (the two gradient passes + the caller's eval pass reuse
+    pinned (the two gradient passes + the caller's eval pass reuse
     it); weight vectors flow as broadcast one-row joins, never a
     collect."""
     li = table(spark, sf_dir, "lineitem")
@@ -432,7 +432,7 @@ def _logreg_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("l_discount") * 10.0).alias("x2"),
         F.lit(1.0).alias("x3"),
         F.when(F.col("l_returnflag") == "R", 1.0).otherwise(0.0).alias("y"),
-    ).transform(_persisted)
+    ).transform(pin)
 
     # step 1: w = 0 -> sigmoid(0) = 0.5 exactly; gradient is avg((0.5-y)*x)
     r = F.lit(0.5) - F.col("y")
@@ -1380,23 +1380,23 @@ def coreset_kcenter_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
     c0 = e.filter(F.col("vec_id") == 0).select(F.col("emb").alias("ce"))
     d1 = e.crossJoin(F.broadcast(c0)).select(
         "vec_id", "emb", dist(F.col("emb"), F.col("ce")).alias("dmin")
-    ).transform(_persisted)
+    ).transform(pin)
     c1 = (
         d1.orderBy(F.round("dmin", 6).desc(), F.col("vec_id").asc())
         .limit(1)
         .select(F.col("vec_id").alias("cid"), F.col("emb").alias("ce"))
-        .transform(_persisted)
+        .transform(pin)
     )
     d2 = d1.crossJoin(F.broadcast(c1.select("ce"))).select(
         "vec_id",
         "emb",
         F.least(F.col("dmin"), dist(F.col("emb"), F.col("ce"))).alias("dmin"),
-    ).transform(_persisted)
+    ).transform(pin)
     c2 = (
         d2.orderBy(F.round("dmin", 6).desc(), F.col("vec_id").asc())
         .limit(1)
         .select(F.col("vec_id").alias("cid"), F.col("emb").alias("ce"))
-        .transform(_persisted)
+        .transform(pin)
     )
     d3 = d2.crossJoin(F.broadcast(c2.select("ce"))).select(
         "vec_id",
@@ -1753,7 +1753,7 @@ def gbdt_stump_boosting(spark: SparkSession, sf_dir: str) -> DataFrame:
     float noise cannot flip the chosen split.
 
     Round 13 (guide §5.4): the tiny boosting frames (cells, f0, b1, r2,
-    b2) are pinned with lazy localCheckpoint. Each was consumed by
+    b2) are pinned lazily (``pin``). Each was consumed by
     several downstream crossJoin(broadcast(...)) sites, and every
     broadcast re-executed its full nested subtree (b2 embeds r2 embeds
     b1 embeds f0 embeds cells) — 119 Spark jobs / 119 Exchanges / a
@@ -1773,11 +1773,9 @@ def gbdt_stump_boosting(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("double")
             .alias("sq"),
         )
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
-    f0 = cells.agg((F.sum("sy") / F.sum("n")).alias("f0")).localCheckpoint(
-        eager=False
-    )
+    f0 = pin(cells.agg((F.sum("sy") / F.sum("n")).alias("f0")))
     thrs = (
         cells.select(F.col("x1").alias("thr"))
         .union(cells.select("x2"))
@@ -1819,7 +1817,7 @@ def gbdt_stump_boosting(spark: SparkSession, sf_dir: str) -> DataFrame:
     r1 = cells.crossJoin(F.broadcast(f0)).select(
         "x1", "x2", "n", "sy", "sq", (F.col("sy") - F.col("f0") * F.col("n")).alias("r")
     )
-    b1 = best_stump(r1).localCheckpoint(eager=False)
+    b1 = best_stump(r1).transform(pin)
 
     def side(b_prefix, x1c, x2c):
         v = F.when(F.col(f"{b_prefix}.feat") == 1, x1c).otherwise(x2c)
@@ -1838,10 +1836,10 @@ def gbdt_stump_boosting(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sq",
             (F.col("f0") + side("b1", F.col("x1"), F.col("x2"))).alias("pred1"),
         )
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     r2r = r2.withColumn("r", F.col("sy") - F.col("pred1") * F.col("n"))
-    b2 = best_stump(r2r).localCheckpoint(eager=False)
+    b2 = best_stump(r2r).transform(pin)
     final = (
         r2.crossJoin(F.broadcast(b2.alias("b2")))
         .select(
@@ -1959,7 +1957,7 @@ def ml_dbscan_grid_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("cy"),
         )
     )
-    cells = pts.groupBy("cx", "cy").agg(F.count(F.lit(1)).alias("c")).transform(_persisted)
+    cells = pts.groupBy("cx", "cy").agg(F.count(F.lit(1)).alias("c")).transform(pin)
     dense = cells.filter(F.col("c") >= _DB_MINPTS).select(
         ((F.col("cx") + _DB_OFF) * _DB_ENC + (F.col("cy") + _DB_OFF)).alias("cid"),
         "cx",
@@ -2299,7 +2297,7 @@ def ml_quantile_reg_pinball(spark: SparkSession, sf_dir: str) -> DataFrame:
     # simhash bit-sum pattern): a row explode x21 would materialize
     # 21x the corpus just to feed a partial agg — column-wise, the
     # whole sweep is map-side arithmetic and the result is ONE row.
-    def pin(b: float):
+    def pinball_sum(b: float):
         # non-negative terms quantized to 1e-6-scaled BIGINTs: the sum
         # is exact integer arithmetic — order-independent like the
         # DECIMAL discipline but on the fast long accumulation path
@@ -2315,7 +2313,7 @@ def ml_quantile_reg_pinball(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     agg = pts.agg(
         F.count(F.lit(1)).alias("n"),
-        *[pin(s).alias(f"s{i}") for i, s in enumerate(_QR_SLOPES)],
+        *[pinball_sum(s).alias(f"s{i}") for i, s in enumerate(_QR_SLOPES)],
     )
     loss = agg.select(
         F.explode(

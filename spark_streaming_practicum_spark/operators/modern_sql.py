@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..registry import query
-from ..functions.ranks import persisted as _persisted
+from ..functions.pins import pin
 
 
 @query(
@@ -254,7 +254,7 @@ def sketch_theta_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("theta_sketch_agg(user_id)").alias("sk"),
         F.countDistinct("user_id").alias("exact_users"),
     )
-    sk = sk.transform(_persisted)
+    sk = sk.transform(pin)
     per_type = sk.select(
         "event_type",
         F.expr("theta_sketch_estimate(sk)").alias("est"),

@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..registry import query
-from ..functions.ranks import persisted as _persisted
+from ..functions.pins import pin
 
 
 def decode_image_real(payload: bytes) -> tuple[int, int]:
@@ -411,12 +411,12 @@ def mm_phash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
             acc = bit if acc is None else acc + bit
         return acc.cast("bigint")
 
-    # persist the signature frame: both sides of the banded self-join
+    # pin the signature frame: both sides of the banded self-join
     # derive from it, and without the cache boundary the whole string
     # pipeline above is evaluated twice (once per join side)
     hashed = counted.select(
         "doc_id", *[band(j).alias(f"b{j}") for j in range(_PHASH_BANDS)]
-    ).transform(_persisted)
+    ).transform(pin)
 
     bands = F.explode(
         F.array(

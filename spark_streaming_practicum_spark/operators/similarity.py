@@ -21,8 +21,7 @@ from pyspark.sql import functions as F
 from ..catalog import table
 from ..functions.vector import dot, l2_norm
 from ..registry import query
-from ..functions.ranks import persisted as _persisted
-from ..functions.ranks import unpersist_tracked as _unpersist
+from ..functions.pins import pin
 
 QUERY_VEC_ID = 0
 TOP_K = 20
@@ -663,7 +662,7 @@ def sim_mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (an array-keyed hash aggregate + exchange per round; measured at
     sf0.1 the swap takes the query from 5.99 s / 19 jobs to 2.25 s /
     11 jobs min-of-4). The candidate norm is projected once next to the
-    persisted relevance; the selected norms fold in Python with the
+    pinned relevance; the selected norms fold in Python with the
     same sequential order as sq_norm, so every pairwise cosine is
     bit-identical to the joined form. Similarities round to 6 dp before
     max/argmax, so both engines pick identical vectors (ties fall to
@@ -689,7 +688,7 @@ def sim_mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("rel"),
             l2_norm("embedding").alias("e_norm"),
         )
-        .transform(_persisted)
+        .transform(pin)
     )
 
     def _seq_norm(vs: list) -> float:
@@ -729,7 +728,6 @@ def sim_mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         top = scored.orderBy(F.col("mmr").desc(), "vec_id").limit(1).collect()[0]
         picked.append((rank, top["vec_id"], float(top["rel"]), float(top["mmr"])))
         selected.append((top["vec_id"], list(top["e"]), _seq_norm(list(top["e"]))))
-    _unpersist(cands)
     out_schema = T.StructType(
         [
             T.StructField("rank", T.IntegerType(), False),
@@ -1055,7 +1053,7 @@ def crosslingual_margin_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
                 / _MINE_K
             ).alias("knn"),
         )
-    ).transform(_persisted)
+    ).transform(pin)
     ks = knn.filter(F.col("side") == "s").select("id", F.col("knn").alias("knn_s"))
     kt = knn.filter(F.col("side") == "t").select("id", F.col("knn").alias("knn_t"))
     left2 = left.join(ks.hint("shuffle_hash"), "id").select(

@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 from ..catalog import table
 from ..functions.textfns import EN_STOPWORDS, poly_hash, shingles, tokens
 from ..registry import query
-from ..functions.ranks import persisted as _persisted
+from ..functions.pins import pin
 
 _STOP_SQL = "[" + ", ".join(f"'{w}'" for w in EN_STOPWORDS) + "]"
 
@@ -131,11 +131,10 @@ def text_lang_id_trigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     # explode — doc_id is unique per row, so this equals the row-level
     # distinct() it replaces, minus that distinct's full shuffle of the
     # exploded frame (the round-2 bench's highest-variance step).
-    tri = (
-        d.select("doc_id", "lang", F.explode(F.array_distinct(tg_arr)).alias("tg"))
-        .transform(_persisted)
+    tri = pin(
+        d.select("doc_id", "lang", F.explode(F.array_distinct(tg_arr)).alias("tg")),
+        eager=True,  # shared by profile training, scoring and the nt count
     )
-    tri.count()  # shared by profile training, scoring and the nt count
     ntri = tri.groupBy("doc_id").agg(F.count(F.lit(1)).alias("nt"))
     rk = W.partitionBy("lang").orderBy(F.col("n").desc(), F.col("tg").asc())
     prof = (
@@ -811,7 +810,7 @@ def ngram_draft_acceptance_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("doc_id", "b.prev", "b.nxt")
     )
-    bg = bg.transform(_persisted)
+    bg = bg.transform(pin)
     counts = bg.groupBy("prev", "nxt").agg(F.count(F.lit(1)).alias("c"))
     draft = (
         counts.groupBy("prev")
@@ -1143,7 +1142,7 @@ def lm_stupid_backoff_trigram(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(
             F.col("i0") >= 2, F.xxhash64(F.element_at("_w", F.col("i0") - 1))
         ).alias("w1"),
-    ).transform(_persisted)
+    ).transform(pin)
     uni = tok.groupBy(F.col("w3").alias("g1")).agg(F.count(F.lit(1)).alias("c1"))
     tot = tok.agg(F.count(F.lit(1)).alias("t"))
     # Attach each backoff level's DENOMINATOR to the count table itself

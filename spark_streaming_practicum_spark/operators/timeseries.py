@@ -15,7 +15,7 @@ from ..catalog import table
 from ..functions.aggs import dsum, dsum_sql
 from ..functions.skew import salted_join
 from ..registry import query
-from ..functions.ranks import persisted as _persisted
+from ..functions.pins import pin
 
 
 @query(
@@ -616,7 +616,7 @@ def ts_theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.datediff(
             "day", F.min("day").over(Window.partitionBy())
         ).cast("double").alias("x"),
-    ).transform(_persisted)
+    ).transform(pin)
     a = idx.select(F.col("n").alias("an"), F.col("x").alias("ax"))
     b = idx.select(F.col("n").alias("bn"), F.col("x").alias("bx"))
     slopes = a.join(b, F.col("bx") > F.col("ax")).select(
@@ -865,7 +865,7 @@ def ts_sax_motif_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             "rn",
             ((F.col("value") - F.col("mu")) / F.col("sd")).alias("zv"),
         )
-        .transform(_persisted)
+        .transform(pin)
     )
     paa = z.groupBy(
         "user_id",

@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..registry import query
-from ..functions.ranks import persisted as _persisted
+from ..functions.pins import pin
 
 _ROUNDS = 3
 
@@ -178,7 +178,7 @@ def bpe_learn_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     results = []
     for r in range(_ROUNDS):
-        best = _best(_pairs(chars)).transform(_persisted)
+        best = _best(_pairs(chars)).transform(pin)
         results.append(
             best.select(
                 F.lit(r + 1).alias("merge_rank"),

@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from ..catalog import table
 from ..functions.textfns import tokens
 from ..registry import query
-from ..functions.ranks import persisted as _persisted
+from ..functions.pins import pin
 
 _V = 50  # vocabulary size
 _Z = 3  # topics
@@ -289,12 +289,14 @@ def keyphrase_textrank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionAll(co.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "n"))
         .groupBy("src", "dst")
         .agg(F.sum("n").alias("w"))
-        .transform(_persisted)
+        .transform(pin)
     )
-    enorm = sym.withColumn(
-        "p", F.col("w") * 1.0 / F.sum("w").over(Window.partitionBy("src"))
-    ).select("src", "dst", "p").transform(_persisted)
-    enorm.count()
+    enorm = pin(
+        sym.withColumn(
+            "p", F.col("w") * 1.0 / F.sum("w").over(Window.partitionBy("src"))
+        ).select("src", "dst", "p"),
+        eager=True,
+    )
     nodes = sym.select(F.col("src").alias("node")).distinct()
     nn = nodes.count()
     pr = nodes.withColumn("pr", F.lit(1.0 / nn))

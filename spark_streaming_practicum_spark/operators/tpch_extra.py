@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from ..catalog import table
 from ..functions.aggs import dsum, dsum_sql
 from ..registry import query
-from ..functions.ranks import persisted as _persisted
+from ..functions.pins import pin
 
 _REV = "l_extendedprice * (1 - l_discount)"
 
@@ -302,7 +302,7 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("l_shipdate") < F.lit("1996-04-01").cast("timestamp"))
     )
     rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    r = l.groupBy("l_suppkey").agg(dsum(rev).alias("total_rev")).transform(_persisted)
+    r = l.groupBy("l_suppkey").agg(dsum(rev).alias("total_rev")).transform(pin)
     best = r.agg(F.max("total_rev").alias("m")).collect()[0]["m"]
     s = table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
     return (
@@ -376,19 +376,18 @@ def q21_sole_late_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     finished multi-supplier orders — a semi join (some other supplier in
     the order) composed with an anti join (no other LATE supplier),
     both with inequality conjuncts. The late set is computed once and
-    persisted; it feeds the anti join against itself."""
+    pinned; it feeds the anti join against itself."""
     o = table(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F").select(
         "o_orderkey", "o_orderdate"
     )
     l = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey", "l_shipdate")
-    late = (
+    late = pin(
         l.join(o, l.l_orderkey == o.o_orderkey)
         .filter(F.col("l_shipdate") > F.col("o_orderdate") + F.expr("INTERVAL 60 DAY"))
         .select("l_orderkey", "l_suppkey")
-        .distinct()
-        .transform(_persisted)
+        .distinct(),
+        eager=True,
     )
-    late.count()
     other = l.select(
         F.col("l_orderkey").alias("o_k"), F.col("l_suppkey").alias("o_s")
     ).distinct()

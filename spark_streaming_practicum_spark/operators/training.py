@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 from ..catalog import table
 from ..functions.textfns import poly_hash, shingles, tokens
 from ..registry import query
-from ..functions.ranks import persisted as _persisted
+from ..functions.pins import pin
 
 # DuckDB mirror of poly_hash over an arbitrary string expression.
 _POLY_SQL = (
@@ -305,13 +305,13 @@ def ids_contiguous_global(spark: SparkSession, sf_dir: str) -> DataFrame:
     offsets, broadcast-joined back; (3) ids = offset + local
     row_number within the partition. Every pass is fully parallel; the
     only driver-side state is P integers. The partitioned frame is
-    persisted so both passes see identical range boundaries."""
+    pinned so both passes see identical range boundaries."""
     d = (
         table(spark, sf_dir, "documents")
         .select("doc_id")
         .repartitionByRange(spark.sparkContext.defaultParallelism, "doc_id")
         .withColumn("pid", F.spark_partition_id())
-        .transform(_persisted)
+        .transform(pin)
     )
     sizes = {r["pid"]: r["n"] for r in d.groupBy("pid").agg(F.count(F.lit(1)).alias("n")).collect()}
     offsets, acc = [], 0
@@ -965,7 +965,7 @@ def t5_span_corruption_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
             (((F.col("doc_id") % 1000003) * 2654435761 + F.floor(F.col("pos") / 3) * 40503) % 100)
             < 15
         ).alias("masked"),
-    ).transform(_persisted)
+    ).transform(pin)
     w_k = Window.partitionBy("doc_id").orderBy("p0")
     spans = (
         tagged.filter("masked")
@@ -1146,7 +1146,7 @@ def bradley_terry_one_step(spark: SparkSession, sf_dir: str) -> DataFrame:
             | ((F.col("wv") == F.col("lv")) & (F.col("wid") < F.col("lid")))
         )
     ).select(F.col("wt").alias("winner"), F.col("lt").alias("loser"))
-    duel = duel.transform(_persisted)
+    duel = duel.transform(pin)
     wins = duel.groupBy(F.col("winner").alias("item")).agg(F.count(F.lit(1)).alias("w"))
     games = (
         duel.select(F.col("winner").alias("item"))
@@ -1628,7 +1628,7 @@ def rlhf_dpo_implicit_reward(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.xxhash64(F.split(F.col("bigram"), " ").getItem(0)).alias("w1"),
             F.xxhash64(F.split(F.col("bigram"), " ").getItem(1)).alias("w2"),
         )
-        .transform(_persisted)
+        .transform(pin)
     )
     uni = bg.groupBy("w1").agg(F.count(F.lit(1)).alias("c1"))
     bi = bg.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c12"))

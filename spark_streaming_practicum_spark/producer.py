@@ -21,6 +21,7 @@ the top-level ``product_id`` used to drive schema evolution
 from __future__ import annotations
 
 import json
+import os
 import random
 import uuid
 from dataclasses import dataclass, field
@@ -125,8 +126,13 @@ class LocalDirSink:
         self._rng = random.Random(seed)
 
     def write(self, payload: str) -> Path:
+        # Temp-write then rename: a file source listing the directory
+        # mid-write must never see a torn batch. The temp name starts
+        # with "." so Spark's file index skips it.
         target = self.path / f"{_uuid(self._rng)}.json"
-        target.write_text(payload)
+        tmp = self.path / f".{target.name}.tmp"
+        tmp.write_text(payload)
+        os.replace(tmp, target)
         return target
 
 

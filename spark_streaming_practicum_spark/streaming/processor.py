@@ -4,8 +4,8 @@ Re-expressed from /root/reference/src/consumer/stream_processor.py with
 one deliberate fix (SURVEY.md §4 "double computation hazard"): the
 reference runs two count() actions plus two writes over uncached lineage
 (stream_processor.py:118-129), recomputing the parse up to 4x per
-micro-batch. Here each micro-batch is persisted once, observability
-counts come off the persisted frame, and both sinks read it.
+micro-batch. Here each micro-batch is cached once, observability
+counts come off the cached frame, and both sinks read it.
 """
 
 from __future__ import annotations
@@ -62,6 +62,7 @@ class StreamProcessor:
 
         parser = JsonArrayBatchParser(self.schema, self.json_options)
         router = Router(self.schema)
+        # not pin(): scoped to this batch and released in the finally below
         parsed = parser.parse(batch).persist()
         try:
             routed = router.split(parsed)

@@ -74,3 +74,38 @@ def built_query(name: str, spark, sf_dir: str | None = None):
     if key not in _PLAN_CACHE:
         _PLAN_CACHE[key] = all_queries()[name].fn(spark, sf_dir or SF_DIR)
     return _PLAN_CACHE[key]
+
+
+def build_with_pinned_plans(name: str, spark, sf_dir: str | None = None):
+    """Build a registered query afresh and return ``(df, plans)``: the
+    formatted plan of ``df`` followed by that of every frame its build
+    pinned. A pin truncates lineage, so a plan-shape check on work
+    upstream of a pin has to read the pinned frame's own plan."""
+    from spark_streaming_practicum_spark.plans import formatted_plan
+    from spark_streaming_practicum_spark.registry import all_queries
+
+    frame_cls = type(spark.range(1))
+    real = frame_cls.localCheckpoint
+    pinned: list[str] = []
+
+    def recording(self, *args, **kwargs):
+        pinned.append(formatted_plan(self))
+        return real(self, *args, **kwargs)
+
+    frame_cls.localCheckpoint = recording
+    try:
+        df = all_queries()[name].fn(spark, sf_dir or SF_DIR)
+    finally:
+        frame_cls.localCheckpoint = real
+    return df, [formatted_plan(df), *pinned]
+
+
+def release_query_pins() -> None:
+    """``release_pins()`` at a test's query boundary. Cached plans read
+    pins, so the plan cache is dropped too: a later ``built_query``
+    would otherwise read released blocks, and fail or pass depending on
+    which tests ran first."""
+    from spark_streaming_practicum_spark.functions.pins import release_pins
+
+    release_pins()
+    _PLAN_CACHE.clear()

@@ -17,7 +17,7 @@ import pytest
 import bench
 from spark_streaming_practicum_spark.registry import QueryDef, all_queries
 
-from .conftest import SF_DIR
+from .conftest import SF_DIR, release_query_pins
 
 
 def test_headline_queries_all_registered():
@@ -115,6 +115,7 @@ def test_per_query_line_precedes_final_line(
         getattr(bench, entry)()
     except SystemExit as exc:  # full_sweep exits with its error status
         assert exc.code == 0
+    release_query_pins()  # bench released every pin; drop plans reading them
     lines = capsys.readouterr().out.strip().splitlines()
     per_query, final = json.loads(lines[-2]), json.loads(lines[-1])
     assert list(per_query) == [name]

@@ -83,10 +83,11 @@ def test_paragraph_dedup_single_hash_shuffle(spark):
 def test_pca_unit_norm_and_single_corpus_scan(spark):
     df = DEFS["pca_power_iteration_top_pc"].fn(spark, SF_DIR)
     plan = formatted_plan(df)
-    # the corpus-sized embeddings table feeds a cached covariance: the
-    # mirror union and all 3 iterations read the InMemoryRelation, so
-    # the parquet is scanned exactly once at materialization
-    assert "InMemoryTableScan" in plan or "InMemoryRelation" in plan, plan[:3000]
+    # the corpus-sized embeddings table feeds a pinned covariance: the
+    # mirror union and all 3 iterations read it as a leaf Scan
+    # ExistingRDD, so the consumer plan never scans the parquet again
+    assert "Scan ExistingRDD" in plan, plan[:3000]
+    assert "embeddings" not in plan, plan[:3000]
     rows = df.collect()
     assert len(rows) == 64
     norm = sum(r.weight**2 for r in rows) ** 0.5

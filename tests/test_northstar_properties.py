@@ -47,12 +47,10 @@ def test_pair_keyed_verifier_matches_corpus_pair_shape(spark):
         _simhash_candidates,
     )
 
-    from spark_streaming_practicum_spark.functions.ranks import persisted
+    from spark_streaming_practicum_spark.functions.pins import pin
 
-    cand = persisted(
-        _simhash_candidates(spark, SF_DIR).select("doc_a", "doc_b")
-    )
-    cand.count()  # one build; the ref and new paths consume it 3x
+    # one build; the ref and new paths consume it 3x
+    cand = pin(_simhash_candidates(spark, SF_DIR).select("doc_a", "doc_b"), eager=True)
     sh = _doc_shingles(spark, SF_DIR)
     cd = (
         cand.select(F.col("doc_a").alias("doc_id"))

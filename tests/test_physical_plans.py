@@ -129,13 +129,14 @@ def test_contiguous_ids_avoid_single_partition_window(spark):
 
 
 def test_pagerank_broadcasts_dims_and_reuses_edges(spark):
-    """Dimension lookups broadcast; the normalized edge table is
-    persisted (InMemoryTableScan) so each iteration reuses one shuffle
-    instead of recomputing the 4-way join."""
+    """Dimension lookups broadcast; the normalized edge table is pinned,
+    so each iteration reads it as a leaf ``Scan ExistingRDD`` and the
+    consumer plan never recomputes the 4-way join over lineitem."""
     df = DEFS["graph_pagerank_trade"].fn(spark, SF_DIR)
     plan = formatted_plan(df)
     assert broadcast_join_count(df) >= 1
-    assert "InMemoryTableScan" in plan or "TableCacheQueryStage" in plan, plan[:3000]
+    assert "Scan ExistingRDD" in plan, plan[:3000]
+    assert "lineitem" not in plan, plan[:3000]
 
 
 def test_scd2_windows_share_one_partitioning(spark):

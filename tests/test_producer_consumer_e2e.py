@@ -9,7 +9,7 @@ import json
 import pytest
 from pyspark.sql import types as T
 
-from spark_streaming_practicum_spark.producer import EventFactory, produce
+from spark_streaming_practicum_spark.producer import EventFactory, LocalDirSink, produce
 from spark_streaming_practicum_spark.sources.streaming import text_file_stream
 from spark_streaming_practicum_spark.streaming.processor import StreamProcessor
 from spark_streaming_practicum_spark.streaming.sinks import ParquetSink
@@ -65,6 +65,26 @@ def test_corruption_truncates_batches(tmp_path):
     for p in paths:
         with pytest.raises(json.JSONDecodeError):
             json.loads(p.read_text())
+
+
+def test_local_dir_sink_lands_whole_file_by_rename(tmp_path, monkeypatch):
+    """A batch file appears under its final name only once complete: the
+    payload goes to a dot-named temp file (skipped by Spark's file
+    index) in the same directory, then is renamed onto the target."""
+    import os
+
+    renames = []
+    real_replace = os.replace
+    monkeypatch.setattr(
+        os, "replace", lambda src, dst: (renames.append((src, dst)), real_replace(src, dst))
+    )
+    payload = json.dumps([{"event_id": str(i), "pad": "x" * 100} for i in range(500)])
+    target = LocalDirSink(tmp_path).write(payload)
+    assert [p.name for p in tmp_path.iterdir()] == [target.name]
+    assert target.read_text() == payload
+    [(src, dst)] = renames
+    assert dst == target
+    assert src.parent == tmp_path and src.name.startswith(".")
 
 
 def test_producer_to_consumer_pipeline(spark, tmp_path):

@@ -9,7 +9,7 @@ import re
 from spark_streaming_practicum_spark.plans import formatted_plan
 from spark_streaming_practicum_spark.registry import all_queries
 
-from .conftest import SF_DIR
+from .conftest import SF_DIR, build_with_pinned_plans
 
 DEFS = all_queries()
 
@@ -19,16 +19,15 @@ def test_rfm_single_rank_pass(spark):
     the plan must carry exactly one range-partitioning exchange (the
     shared global_row_number call), not three — and still never a
     single-partition window."""
-    df = DEFS["rfm_customer_segments"].fn(spark, SF_DIR)
-    plan = formatted_plan(df)
-    assert "SinglePartition" not in plan, plan[:3000]
-    # One rank pass <=> exactly one checkpointed rank frame feeds the
-    # query (the helper's lazy localCheckpoint leaf). Pre-rework each
-    # of the three metrics ranked separately (three distinct leaves).
-    ckpt_ids = set(re.findall(r"MapPartitionsRDD\[(\d+)\] at localCheckpoint", plan))
-    assert len(ckpt_ids) == 1, (
-        f"expected one rank-pass checkpoint leaf, saw {sorted(ckpt_ids)}"
-    )
+    _, plans = build_with_pinned_plans("rfm_customer_segments", spark)
+    # the rank pass and the rollup are pinned, so their work shows in
+    # the pinned frames' plans, not in the consumer's
+    for plan in plans:
+        assert "SinglePartition" not in plan, plan[:3000]
+    # One rank pass <=> exactly one range-partitioning exchange. Pre-rework
+    # each of the three metrics ranked separately (three exchanges).
+    n_range = sum(len(re.findall(r"Arguments: rangepartitioning", p)) for p in plans)
+    assert n_range == 1, f"expected one rank-pass range exchange, saw {n_range}"
 
 
 def test_ab_permutation_single_char_fold(spark):
@@ -37,8 +36,8 @@ def test_ab_permutation_single_char_fold(spark):
     plan — pre-rework each of the 50 replicates re-folded the prefixed
     string per referencing aggregate. The melt's explode must be
     present (narrow aggregate instead of the 201-buffer wide one)."""
-    df = DEFS["ab_permutation_test"].fn(spark, SF_DIR)
-    plan = formatted_plan(df)
+    _, plans = build_with_pinned_plans("ab_permutation_test", spark)
+    plan = "\n".join(plans)  # the melt sits below the pinned diff frame
     n_folds = len(re.findall(r"\baggregate\(split\(", plan))
     assert n_folds <= 1, f"expected <=1 char fold, saw {n_folds}"
     assert "Generate explode" in plan or "Expand" in plan or "explode" in plan, (
@@ -64,7 +63,7 @@ def test_gbdt_stump_frames_stay_checkpointed(spark):
     """gbdt's five lazy checkpoints are first materialized by broadcast
     collects, an undocumented coupling. Measured at sf0.001 on Spark
     4.1.2: 18 jobs and a 107-line plan today; 119 jobs with the
-    pre-checkpoint persisted ``cells``; 15 jobs but a 3,213-line plan
+    pre-checkpoint ``cells`` under persist(); 15 jobs but a 3,213-line plan
     with the checkpoints simply removed. So pin both the job count from
     build through ``collect()`` and the plan size."""
     sc = spark.sparkContext

@@ -21,13 +21,10 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from spark_streaming_practicum_spark.catalog import table
-from spark_streaming_practicum_spark.functions.ranks import (
-    global_row_number,
-    release_persisted_frames,
-)
+from spark_streaming_practicum_spark.functions.ranks import global_row_number
 from spark_streaming_practicum_spark.plans import formatted_plan
 
-from .conftest import SF_DIR
+from .conftest import SF_DIR, release_query_pins
 
 
 def _base(spark):
@@ -60,7 +57,7 @@ def test_mono_id_rank_matches_reference_window(spark):
     eager, n = global_row_number(base, order, rn_name="rn")
     assert _rank_map(eager, "rn") == expected
     assert n == sum(len(v) for v in expected.values())
-    release_persisted_frames()
+    release_query_pins()
 
 
 def test_rank_plan_avoids_removed_shapes(spark):
@@ -85,7 +82,7 @@ def test_rank_plan_avoids_removed_shapes(spark):
     assert "BroadcastHashJoin" in eager_plan
     # lineage truncated: consumers re-plan a leaf, not the rank subtree
     assert "at localCheckpoint" in eager_plan, eager_plan[:3000]
-    release_persisted_frames()
+    release_query_pins()
 
 
 def test_rank_project_stays_above_sort(spark):
@@ -103,7 +100,7 @@ def test_rank_project_stays_above_sort(spark):
     plan = formatted_plan(
         _with_local_rank(base, order, spark.sparkContext.defaultParallelism)
     )
-    release_persisted_frames()
+    release_query_pins()
     # operator ids from the numbered details section
     proj_ids = {
         m.group(1)

@@ -77,7 +77,7 @@ def test_stream_routes_to_both_sinks(spark, dirs):
     assert {(r.id, r.name) for r in bronze.collect()} == {("1", "a"), ("2", "b")}
     reasons = sorted(r["_dead_letter_reason"] for r in dead.collect())
     assert reasons == ["corrupted_batch", "invalid_schema"]
-    # metrics were recorded off the persisted batch (A15 improvement)
+    # metrics were recorded off the cached batch (A15 improvement)
     assert sum(m.valid_rows for m in proc.metrics) == 2
     assert sum(m.dead_letter_rows for m in proc.metrics) == 2
 
