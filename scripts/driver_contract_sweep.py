@@ -41,6 +41,8 @@ import duckdb
 
 sys.path.insert(0, "/root/repo")
 
+from spark_streaming_practicum_spark.functions.pins import release_pins  # noqa: E402
+
 TABLES = (
     "region nation customer supplier part orders lineitem "
     "events documents embeddings"
@@ -144,6 +146,8 @@ def main() -> int:
             (tuple(canon(v) for v in (r[c] for c in s_cols)) for r in sdf.collect()),
             key=repr,
         )
+        # the query is materialized: free its pins before the next build
+        release_pins()
         if name not in osql:
             rows_only.append(name)
             print(f"[{i:3d}/{len(names)}] {name}: ROWS-ONLY ({len(s_rows)} rows, "

@@ -11,6 +11,17 @@ Checkpoint blocks are not tracked by the CacheManager, so neither
 dropping every reference leaves some resident until a JVM GC happens to
 reach them. ``pin`` therefore records the id of each checkpoint RDD,
 and ``release_pins`` frees them all at a query boundary.
+
+Only callers that own the query boundary release: ``bench.py``, the
+profiling scripts and ``scripts/driver_contract_sweep.py``, each after
+the query's action. ``__spark_entry__.queries()`` cannot: the driver
+contract hands back unmaterialized frames and does not promise that one
+is collected before the next is built, and releasing early turns a
+stale block into a failed query. On that path pins are bounded by JVM
+GC alone, as every ``localCheckpoint`` was before this module; the
+blocks are stored MEMORY_AND_DISK, so a resident pin spills to local
+disk rather than failing a later query. ``_pins`` then keeps growing by
+a few integer pairs per query, which is negligible.
 """
 
 from __future__ import annotations

@@ -76,28 +76,31 @@ def built_query(name: str, spark, sf_dir: str | None = None):
     return _PLAN_CACHE[key]
 
 
-def build_with_pinned_plans(name: str, spark, sf_dir: str | None = None):
+def build_with_pinned_plans(name: str, spark, render=None):
     """Build a registered query afresh and return ``(df, plans)``: the
-    formatted plan of ``df`` followed by that of every frame its build
-    pinned. A pin truncates lineage, so a plan-shape check on work
-    upstream of a pin has to read the pinned frame's own plan."""
+    plan of ``df`` followed by that of every frame its build pinned,
+    each rendered by ``render`` (default ``formatted_plan``) before the
+    checkpoint runs. A pin truncates lineage (the consumer plan shows it
+    as a leaf ``Scan ExistingRDD``), so a plan check on work upstream of
+    a pin, above all an absence check, has to read every one of these."""
     from spark_streaming_practicum_spark.plans import formatted_plan
     from spark_streaming_practicum_spark.registry import all_queries
 
+    render = render or formatted_plan
     frame_cls = type(spark.range(1))
     real = frame_cls.localCheckpoint
     pinned: list[str] = []
 
     def recording(self, *args, **kwargs):
-        pinned.append(formatted_plan(self))
+        pinned.append(render(self))
         return real(self, *args, **kwargs)
 
     frame_cls.localCheckpoint = recording
     try:
-        df = all_queries()[name].fn(spark, sf_dir or SF_DIR)
+        df = all_queries()[name].fn(spark, SF_DIR)
     finally:
         frame_cls.localCheckpoint = real
-    return df, [formatted_plan(df), *pinned]
+    return df, [render(df), *pinned]
 
 
 def release_query_pins() -> None:

@@ -14,7 +14,7 @@ from spark_streaming_practicum_spark.plans import (
 )
 from spark_streaming_practicum_spark.registry import all_queries
 
-from .conftest import SF_DIR
+from .conftest import SF_DIR, build_with_pinned_plans
 
 DEFS = all_queries()
 
@@ -109,10 +109,10 @@ def test_logreg_improves_over_chance(spark):
 def test_logreg_no_collect_single_plan(spark):
     """The whole 2-step + eval pipeline is ONE lazy plan: weight vectors
     enter as broadcast one-row joins, never via driver collect."""
-    df = DEFS["logreg_gd_two_steps"].fn(spark, SF_DIR)
-    plan = formatted_plan(df)
-    assert "BroadcastNestedLoopJoin" in plan, plan[:3000]
-    assert "CartesianProduct" not in plan
+    _, plans = build_with_pinned_plans("logreg_gd_two_steps", spark)
+    assert "BroadcastNestedLoopJoin" in plans[0], plans[0][:3000]
+    for plan in plans:
+        assert "CartesianProduct" not in plan
 
 
 def test_compaction_bins_fill_to_target(spark):

@@ -31,7 +31,6 @@ def test_release_returns_persistent_rdds_to_their_size_before_the_pins(spark):
     after = _persistent_ids(spark)
     # the ContextCleaner may drop unrelated RDDs meanwhile, never add pins
     assert after <= before and not (after & pinned)
-    assert len(after) == len(before)
     assert not pins._pins
 
 

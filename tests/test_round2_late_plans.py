@@ -13,7 +13,7 @@ from spark_streaming_practicum_spark.plans import (
 )
 from spark_streaming_practicum_spark.registry import all_queries
 
-from .conftest import SF_DIR
+from .conftest import SF_DIR, build_with_pinned_plans
 
 DEFS = all_queries()
 
@@ -297,17 +297,17 @@ def test_equidepth_histogram_no_single_partition_window(spark):
     """histogram_equidepth must rank through the two-pass range-partition
     scheme — a bare ntile() window would funnel the whole events table
     through an Exchange SinglePartition."""
-    df = DEFS["histogram_equidepth"].fn(spark, SF_DIR)
-    plan = formatted_plan(df)
-    assert "SinglePartition" not in plan, plan[:3000]
+    _, plans = build_with_pinned_plans("histogram_equidepth", spark)
+    for plan in plans:
+        assert "SinglePartition" not in plan, plan[:3000]
 
 
 def test_rfm_quartiles_no_single_partition_window(spark):
     """All three RFM quartile assignments rank distributed; no pass may
     move the customer rollup to one task."""
-    df = DEFS["rfm_customer_segments"].fn(spark, SF_DIR)
-    plan = formatted_plan(df)
-    assert "SinglePartition" not in plan, plan[:3000]
+    _, plans = build_with_pinned_plans("rfm_customer_segments", spark)
+    for plan in plans:
+        assert "SinglePartition" not in plan, plan[:3000]
 
 
 def test_shuffle_hash_hint_plans_shuffled_hash_join(spark):

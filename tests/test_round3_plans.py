@@ -11,7 +11,7 @@ from spark_streaming_practicum_spark.plans import (
 )
 from spark_streaming_practicum_spark.registry import all_queries
 
-from .conftest import SF_DIR
+from .conftest import SF_DIR, build_with_pinned_plans
 
 DEFS = all_queries()
 
@@ -21,10 +21,10 @@ def test_xicor_no_global_window_and_bounds(spark):
     distributed ranking — no per-group or single-partition WindowExec
     over the raw table), and xi lands in its [-0.5, 1] theoretical
     range with near-zero values for independent columns."""
-    df = DEFS["xicor_correlation"].fn(spark, SF_DIR)
-    plan = formatted_plan(df)
-    for m in re.finditer(r"windowspecdefinition\(([^)]*)\)", plan):
-        assert "_pid" in m.group(1), m.group(0)
+    df, plans = build_with_pinned_plans("xicor_correlation", spark)
+    for plan in plans:
+        for m in re.finditer(r"windowspecdefinition\(([^)]*)\)", plan):
+            assert "_pid" in m.group(1), m.group(0)
     rows = df.collect()
     assert len(rows) == 3
     for r in rows:
@@ -99,10 +99,10 @@ def test_draft_table_broadcast_and_rate_bounds(spark):
     through round 11, hint-free AQE in round 12, and a SHUFFLE_HASH
     hint since round 13 (guide §3.1 — per-partition build bounded by
     |vocab|/P at any scale). Acceptance rates are valid fractions."""
-    df = DEFS["ngram_draft_acceptance_rate"].fn(spark, SF_DIR)
-    plan = formatted_plan(df)
-    assert broadcast_join_count(df) >= 1 or "ShuffledHashJoin" in plan, plan[:3000]
-    assert "SortMergeJoin" not in plan, plan[:3000]
+    df, plans = build_with_pinned_plans("ngram_draft_acceptance_rate", spark)
+    assert broadcast_join_count(df) >= 1 or "ShuffledHashJoin" in plans[0], plans[0][:3000]
+    for plan in plans:
+        assert "SortMergeJoin" not in plan, plan[:3000]
     rows = df.collect()
     assert rows, "no documents scored"
     for r in rows:
@@ -144,10 +144,10 @@ def test_curriculum_stages_balanced_and_no_global_window(spark):
 
     from pyspark.sql import functions as F
 
-    df = DEFS["curriculum_perplexity_stages"].fn(spark, SF_DIR)
-    plan = formatted_plan(df)
-    for m in _re.finditer(r"windowspecdefinition\(([^)]*)\)", plan):
-        assert "_pid" in m.group(1), m.group(0)
+    df, plans = build_with_pinned_plans("curriculum_perplexity_stages", spark)
+    for plan in plans:
+        for m in _re.finditer(r"windowspecdefinition\(([^)]*)\)", plan):
+            assert "_pid" in m.group(1), m.group(0)
     sizes = [
         r["n"]
         for r in df.groupBy("stage").agg(F.count(F.lit(1)).alias("n")).collect()
@@ -206,7 +206,7 @@ def test_crosslingual_gemm_never_shuffles_pair_matrix(spark):
     """The mined result must come from the two applyInPandas passes —
     the plan carries FlatMapGroupsInPandas and no BroadcastNestedLoopJoin
     pair product."""
-    df = DEFS["crosslingual_margin_mining"].fn(spark, SF_DIR)
-    plan = formatted_plan(df)
-    assert plan.count("FlatMapGroupsInPandas") >= 2, plan[:3000]
-    assert "BroadcastNestedLoopJoin" not in plan, plan[:3000]
+    _, plans = build_with_pinned_plans("crosslingual_margin_mining", spark)
+    assert plans[0].count("FlatMapGroupsInPandas") >= 2, plans[0][:3000]
+    for plan in plans:
+        assert "BroadcastNestedLoopJoin" not in plan, plan[:3000]
